@@ -249,7 +249,6 @@ def label_propagation(
     *,
     iterations: int = 3,
     edges_undirected_distinct: bool = False,
-    argmax_mode: bool = True,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (LPA) over
     the undirected graph: every node starts labeled with its own id,
@@ -270,20 +269,13 @@ def label_propagation(
     u<v contract) and skips the symmetrize-distinct shuffle — the union
     with the reversed copy is then distinct by construction, saving one
     full-edge-list exchange before the cache (the NULL/self-loop filter
-    still applies, it is map-side-free). The per-round argmax defaults
-    to a single ``mode(lbl, deterministic=True)`` aggregate
-    (``argmax_mode=True``): Spark 4's deterministic mode returns the
-    LOWEST value among equally-frequent ones — exactly the
-    most-frequent-then-smallest tie-break — as one ObjectHashAggregate
-    whose partial count-maps combine map-side. ``argmax_mode=False``
-    keeps the two-phase count + ``max(struct(cnt, -label))`` form,
-    whose struct-typed max buffer forces a SortAggregate pair: two
-    per-round sorts of the vote counts on top of the extra aggregate
-    (node ids must then be non-NULL integers above LONG_MIN for the
-    negation to be exact). The r17 A/B on the registered query's graph measured
-    mode at 0.66x the two-phase wall with bit-identical labels
-    (bench_runs/r17_lpa_mode_ab.json; parity pinned by
-    tests/test_lpa.py::test_lpa_mode_argmax_is_bit_identical).
+    still applies, it is map-side-free). The per-round argmax is a
+    single ``mode(lbl, deterministic=True)`` aggregate: Spark 4's
+    deterministic mode returns the LOWEST value among equally-frequent
+    ones — exactly the most-frequent-then-smallest tie-break — as one
+    ObjectHashAggregate whose partial count-maps combine map-side
+    (0.66x the two-phase count + struct-max form,
+    bench_runs/r17_lpa_mode_ab.json).
 
     Scale shape, mirroring ``pagerank``'s audit: per round ONE
     equi-join (labels onto the symmetrized edge list) + ONE aggregation
@@ -319,39 +311,15 @@ def label_propagation(
             F.col("v").alias("node"), F.col("label").alias("lbl")
         )
         before = persistent_rdd_ids(spark)
-        if argmax_mode:
-            # ONE aggregate chain per round: mode(lbl, deterministic=
-            # True) IS "most frequent neighbor label, smallest on ties"
-            # — the exact LPA tie-break — computed as an
-            # ObjectHashAggregate whose partial count-maps combine
-            # map-side. The two-phase form below plans the argmax as a
-            # SortAggregate pair (the struct-typed max buffer forces
-            # SortAggregate, tests/test_plan_guards.py:354's documented
-            # behavior), paying two per-round SORTs of the vote counts
-            # on top of the extra aggregate pair — see
-            # plans/r17/graph_label_propagation_round_{before,after}.txt.
-            # r17 A/B at sf0.1 on the registered query's graph:
-            # bench_runs/r17_lpa_mode_ab.json, 0.66x, bit-identical.
-            new_labels = (
-                neigh.groupBy("node")
-                .agg(F.mode("lbl", True).alias("label"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # deterministic argmax without a window: max over
-            # (count, -label) = most frequent label, smallest on ties
-            new_labels = (
-                neigh.groupBy("node", "lbl")
-                .agg(F.count("*").alias("cnt"))
-                .groupBy("node")
-                .agg(
-                    F.max(
-                        F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))
-                    ).alias("m")
-                )
-                .select("node", (-F.col("m.nl")).alias("label"))
-                .localCheckpoint(eager=True)
-            )
+        # mode(lbl, deterministic=True) IS "most frequent neighbor
+        # label, smallest on ties"; a struct-typed max(cnt, -label)
+        # would plan a SortAggregate pair with two per-round sorts
+        # (plans/r17/graph_label_propagation_round_{before,after}.txt).
+        new_labels = (
+            neigh.groupBy("node")
+            .agg(F.mode("lbl", True).alias("label"))
+            .localCheckpoint(eager=True)
+        )
         step_ids = persistent_rdd_ids(spark) - before
         if prev_ids:
             unpersist_rdd_ids(spark, prev_ids)
@@ -668,8 +636,6 @@ def k_truss_edges(
     *,
     rounds: int = 2,
     edges_undirected_distinct: bool = False,
-    reuse_orientation: bool = True,
-    explode_members: bool = True,
 ) -> DataFrame:
     """SYNCHRONOUS k-truss peeling — the EDGE-level density filter next
     to ``k_core_peel``'s node-level one: each round removes EVERY edge
@@ -698,13 +664,10 @@ def k_truss_edges(
     triangle's minimum-(degree, id) vertex, so the wedge volume is
     O(E·arboricity), never Θ(Σ d²) — then ONE edge-keyed support
     aggregate over the triangle stream exploded into its three member
-    edges (``explode_members=True``, the r17 default: one pass over the
-    enumeration; the unionAll-of-three-projections form re-planned the
-    wedge self-join + closing-edge probe once per projection — the A/B
-    bench_runs/r17_ktruss_members_ab.json measured explode at 0.38x
-    with bit-identical output, parity pinned by tests/test_ktruss.py::
-    test_ktruss_explode_members_is_bit_identical; both forms stay
-    partial+final combinable). UNLIKE k-core, the per-round checkpoint
+    edges (one pass over the enumeration, partial+final combinable;
+    0.38x a unionAll of three member projections, which re-planned the
+    enumeration once per projection — bench_runs/r17_ktruss_members_ab.json).
+    UNLIKE k-core, the per-round checkpoint
     is EDGE-sized: the recurrence state IS the surviving edge set (the
     answer itself), so an E-sized materialization per round is the
     honest floor here, not the defect it was for k-core's node-sized
@@ -740,22 +703,16 @@ def k_truss_edges(
     if not edges_undirected_distinct:
         pr = pr.distinct()
 
-    # reuse_orientation: compact-forward enumeration needs only SOME
-    # total vertex order to count each triangle exactly once (at its
-    # minimum vertex in that order); the ROUND-0 (degree, id) order
-    # remains a valid total order on every shrunken edge set, so later
-    # support calls can skip re-deriving degree_census (a 2E-row
-    # shuffle per call) and orient against the pinned round-0 table.
-    # Support counts are orientation-independent — the output is
-    # bit-identical either way (pinned by test). The O(E·arboricity)
-    # wedge bound degrades only as far as the peeled graph's degree
-    # order drifts from round 0's — peeling removes edges, so round-0
-    # degrees only over-estimate. The r17 A/B at sf0.1 (alternating
-    # arms, median-of-3, bench_runs/r17_ktruss_ab.json) measured reuse
-    # at 0.76x the re-derive wall at the registered k=8/rounds=2 — the
-    # degraded bound never showed — so reuse is the default; re-derive
-    # (False) is the right call only for many-round peels where the
-    # drift could compound.
+    # compact-forward enumeration needs only SOME total vertex order to
+    # count each triangle exactly once (at its minimum vertex in that
+    # order); the ROUND-0 (degree, id) order remains a valid total order
+    # on every shrunken edge set, so every support call orients against
+    # the pinned round-0 table instead of re-deriving degree_census (a
+    # 2E-row shuffle per call). Support counts are orientation-
+    # independent; the O(E·arboricity) wedge bound degrades only as far
+    # as the peeled graph's degree order drifts from round 0's. 0.76x
+    # the re-derive wall at the registered k=8/rounds=2
+    # (bench_runs/r17_ktruss_ab.json).
     # cache the normalized edge list BEFORE deriving ord0 (r17): the
     # ord0 checkpoint and round 0's support are SEPARATE actions, and
     # AQE exchange reuse never spans actions — deriving ord0 from the
@@ -763,17 +720,14 @@ def k_truss_edges(
     # action. Censusing the cache instead fills it during the ord0 job
     # and every later action reads blocks.
     cur = tracked_cache(pr)
-    ord0: DataFrame | None = None
-    if reuse_orientation:
-        before0 = persistent_rdd_ids(spark)
-        ord0 = degree_census(cur).localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before0)
+    before0 = persistent_rdd_ids(spark)
+    ord0 = degree_census(cur).localCheckpoint(eager=True)
+    track_rdd_ids(spark, persistent_rdd_ids(spark) - before0)
 
     def support(cur: DataFrame) -> DataFrame:
         """(u, v, cnt) triangle support of a value-ordered edge set —
         triangle_stats' enumeration, re-keyed to member edges."""
-        deg = ord0 if ord0 is not None else degree_census(cur)
-        eo = orient_by_degree(cur, deg)
+        eo = orient_by_degree(cur, ord0)
         e1, e2 = eo.alias("e1"), eo.alias("e2")
         wedges = e1.join(
             e2, (F.col("e1.s") == F.col("e2.s")) & (F.col("e1.t") < F.col("e2.t"))
@@ -789,46 +743,27 @@ def k_truss_edges(
             cur.hint("shuffle_hash"),
             (F.col("u") == F.col("b")) & (F.col("v") == F.col("c")),
         ).select("a", "b", "c")
-        if explode_members:
-            # ONE pass over the triangle stream: each triangle explodes
-            # into its three member edges (a<b and a<c re-ordered by
-            # value; b<c already value-ordered by construction) — the
-            # connected_components explode trick, here applied so the
-            # wedge self-join + closing-edge probe above evaluate ONCE.
-            # The unionAll form re-plans that whole subtree THREE times
-            # (one per member projection); AQE's runtime stage reuse
-            # dedups only the shuffle-feeding map stages, not the three
-            # reduce-side closing-join executions (their downstream
-            # projections differ, so the stages never canonicalize
-            # equal). r17 A/B at the registered constants:
-            # bench_runs/r17_ktruss_members_ab.json.
-            members = tri.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.least("a", "b").alias("u"),
-                            F.greatest("a", "b").alias("v"),
-                        ),
-                        F.struct(
-                            F.least("a", "c").alias("u"),
-                            F.greatest("a", "c").alias("v"),
-                        ),
-                        F.struct(F.col("b").alias("u"), F.col("c").alias("v")),
-                    )
-                ).alias("e")
-            ).select("e.u", "e.v")
-        else:
-            members = (
-                tri.select(
-                    F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+        # ONE pass over the triangle stream: each triangle explodes into
+        # its three member edges (a<b and a<c re-ordered by value; b<c
+        # already value-ordered by construction), so the wedge self-join
+        # + closing-edge probe above evaluate ONCE — AQE's stage reuse
+        # would not dedup three per-member projections of it
+        # (bench_runs/r17_ktruss_members_ab.json).
+        members = tri.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.least("a", "b").alias("u"),
+                        F.greatest("a", "b").alias("v"),
+                    ),
+                    F.struct(
+                        F.least("a", "c").alias("u"),
+                        F.greatest("a", "c").alias("v"),
+                    ),
+                    F.struct(F.col("b").alias("u"), F.col("c").alias("v")),
                 )
-                .unionAll(
-                    tri.select(
-                        F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
-                    )
-                )
-                .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-            )
+            ).alias("e")
+        ).select("e.u", "e.v")
         return members.groupBy("u", "v").agg(F.count("*").alias("cnt"))
 
     kept_ids: set[int] = set()
@@ -866,7 +801,6 @@ def connected_components_jump(
     id_b: str = "id_b",
     *,
     rounds: int = 6,
-    cache_jump_input: bool = False,
 ) -> DataFrame:
     """POINTER-JUMPING connected components: (id, lab) where ``lab``
     converges to the component-minimum id. Staged r16 for a later debut
@@ -979,29 +913,16 @@ def connected_components_jump(
                 F.col("lab"), F.coalesce(F.col("nmin"), F.col("lab"))
             ).alias("lab"),
         )
-        # cache_jump_input: the jump below references m TWICE (both
-        # self-join sides), and the two sides never canonicalize to one
-        # AQE stage (one is the broadcast/build side, one the stream
-        # side), so m's neighbor-min subtree computes twice per round;
-        # a node-sized cache pinned only until this round's checkpoint
-        # is materialized computes it once. A/B'd either way at sf0.1:
-        # bench_runs/r17_ccjump_cachem_ab.json.
-        if cache_jump_input:
-            m = m.cache()
         # (2) pointer jump: lab(v) <- lab(lab(v)) — node-sized self-join.
-        # try/finally: an exception between cache() and the checkpoint
-        # must not leak m's blocks past this round (ADVICE r17)
-        try:
-            before = persistent_rdd_ids(spark)
-            lab = (
-                m.alias("a")
-                .join(m.alias("b"), F.col("a.lab") == F.col("b.id"))
-                .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            if cache_jump_input:
-                m.unpersist(False)  # checkpoint materialized — no consumer
+        # m is left uncached although both join sides read it: caching it
+        # measured 0.999x (bench_runs/r17_ccjump_cachem_ab.json).
+        before = persistent_rdd_ids(spark)
+        lab = (
+            m.alias("a")
+            .join(m.alias("b"), F.col("a.lab") == F.col("b.id"))
+            .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
+            .localCheckpoint(eager=True)
+        )
         step_ids = persistent_rdd_ids(spark) - before
         if kept_ids:
             unpersist_rdd_ids(spark, kept_ids)

@@ -187,7 +187,6 @@ def map_reduce_scalable(
     reducef: Callable[[str, list[str]], str],
     key_col: str = "file",
     value_col: str = "content",
-    arrow_groups: bool = False,
 ) -> DataFrame:
     """The scalable twin of ``map_reduce``: same (mapf, reducef) user
     contract (worker.go:51, README.MD:82), Arrow-batched execution.
@@ -198,14 +197,9 @@ def map_reduce_scalable(
       full sorted value list, honoring the reference's reducef contract
       (``values []string`` per key, worker.go:161-165).
 
-    ``arrow_groups=True`` swaps the reduce to ``applyInArrow`` (one
-    Arrow table per key-group, skipping the per-group pandas block
-    construction). Measured r18 (VERDICT r17 #7, guide §4) and
-    REJECTED as the default: A/B 1.038 — at this group size the pandas
-    materialization is not the cost, and the contract's own
-    ``sorted(to_pylist())`` dominates either way
-    (bench_runs/r18_mr_arrow_ab.json, outputs bit-identical; parity
-    pinned by tests/test_mapreduce_core.py).
+    The reduce stays on ``applyInPandas``: an ``applyInArrow`` reduce
+    gained nothing, since the contract's own sort of the value list
+    dominates either way (bench_runs/r18_mr_arrow_ab.json).
 
     The whole-group-per-task memory shape is inherent to that contract
     (the reference has it too, worker.go:142-153); for unbounded 100 TB
@@ -229,18 +223,6 @@ def map_reduce_scalable(
         map_batches, "key string, value string"
     ).where(F.col("key").isNotNull() & F.col("value").isNotNull())
     # null-pair filter: same non-null contract as map_reduce (see there)
-
-    if arrow_groups:
-        import pyarrow as pa
-
-        def reduce_group_arrow(tbl: "pa.Table") -> "pa.Table":
-            key = tbl.column("key")[0].as_py()
-            vals = sorted(tbl.column("value").to_pylist())
-            return pa.table({"key": [key], "value": [reducef(key, vals)]})
-
-        return pairs.groupBy("key").applyInArrow(
-            reduce_group_arrow, "key string, value string"
-        )
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf["key"].iloc[0]

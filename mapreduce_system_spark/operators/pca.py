@@ -80,7 +80,6 @@ def pca_topk(
     rounds: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_w: bool = True,
 ) -> DataFrame:
     """Top-``k`` principal directions of the (uncentered) corpus:
     (component, pos, loading), component 0 = leading. Directions are
@@ -92,20 +91,13 @@ def pca_topk(
     the fixture corpus to 6 decimals, and a production caller loops to
     a Rayleigh tolerance the way ``clustering.kmeans_fit`` does.
 
-    ``checkpoint_w`` (r18, guide §5): materialize the d-row loading
-    iterate ``w`` once per round BEFORE the norm/normalize step. The
-    norm rides ``v`` as a broadcast subtree, so without this the
-    round's checkpoint action computed the corpus-sized s→w aggregate
-    chain once for the norm subtree and once for the main branch (AQE
-    exchange reuse dedups the shuffle-feeding map stages within the
-    action, but the final round's SEPARATE norm checkpoint action
-    re-ran the whole chain — reuse never spans actions). With the
-    d-row ``w`` checkpointed, every reader — norm, normalize, the
-    final-round norm checkpoint — reads d local rows; the corpus cache
-    is touched exactly 2 times per round. Same doubles: checkpointing
-    changes where a value is read from, never its arithmetic
-    (A/B bit-identical: bench_runs/r18_pca_wckpt_ab.json).
-    ``checkpoint_w=False`` keeps the pre-r18 shape for that A/B.
+    Each round materializes the d-row loading iterate ``w`` BEFORE the
+    norm/normalize step: the norm rides ``v`` as a broadcast subtree,
+    and the final round's separate norm checkpoint action would
+    otherwise re-run the corpus-sized s→w aggregate chain (exchange
+    reuse never spans actions). Every reader then reads d local rows
+    and the corpus cache is touched exactly 2 times per round; the
+    doubles are unchanged (0.91x, bench_runs/r18_pca_wckpt_ab.json).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -155,16 +147,15 @@ def pca_topk(
                 .agg(F.sum(F.col("val") * F.col("s")).alias("v"))
             )
             w = _project_out(w, prev)
-            if checkpoint_w:
-                # materialize the d-row iterate once; the norm subtree and
-                # the normalize branch below both read these blocks instead
-                # of re-running the corpus aggregates (docstring, r18)
-                before_w = persistent_rdd_ids(spark)
-                w = w.localCheckpoint(eager=True)
-                new_w_ids = persistent_rdd_ids(spark) - before_w
-                if w_ids:
-                    unpersist_rdd_ids(spark, w_ids)
-                w_ids = new_w_ids
+            # materialize the d-row iterate once; the norm subtree and
+            # the normalize branch below both read these blocks instead
+            # of re-running the corpus aggregates (docstring)
+            before_w = persistent_rdd_ids(spark)
+            w = w.localCheckpoint(eager=True)
+            new_w_ids = persistent_rdd_ids(spark) - before_w
+            if w_ids:
+                unpersist_rdd_ids(spark, w_ids)
+            w_ids = new_w_ids
             nrm = w.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm"))
             if r == rounds - 1:
                 # the FINAL norm outlives the round (the exhaustion guard

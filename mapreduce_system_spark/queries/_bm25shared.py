@@ -10,8 +10,7 @@ re-seat its queries in the driver window (found when fresh11's draft
 import of fresh7b did exactly that). Constants live here; since r18 the
 BM25 CHAIN does too (:func:`bm25_chain` — moved verbatim from fresh7b
 so the fusion query can reuse its ``tf`` postings table instead of
-re-tokenizing the corpus, guide §2.3/§2.4); fresh11 still resolves the
-registered BM25 through registry.QUERIES where it needs the CALLABLE.
+re-tokenizing the corpus, guide §2.3/§2.4).
 """
 
 from __future__ import annotations

@@ -43,8 +43,7 @@ from mapreduce_system_spark.operators.similarity import matryoshka_norm_profile
 
 # constants only — NEVER a top-level import of another query module
 # (its @register calls would fire here and re-seat its queries in the
-# driver window; see _bm25shared's docstring). The BM25 callable is
-# resolved through registry.QUERIES at call time instead.
+# driver window; see _bm25shared's docstring).
 from mapreduce_system_spark.queries._bm25shared import (
     BM25_B as _BM25_B,
     BM25_K1 as _BM25_K1,
@@ -53,7 +52,7 @@ from mapreduce_system_spark.queries._bm25shared import (
     BM25_VALUES as _BM25_VALUES,
     bm25_chain,
 )
-from mapreduce_system_spark.registry import QUERIES, register
+from mapreduce_system_spark.registry import register
 from mapreduce_system_spark.sources.tables import load_table
 from mapreduce_system_spark.streaming import windows as SW
 
@@ -196,11 +195,6 @@ ORDER BY query, fused_rank
 # engines.
 
 
-# r18 A/B flag (tools/ab_rrf_shared_tf.py patches this; default is the
-# measured winner recorded in bench_runs/r18_rrf_shared_tf_ab.json)
-_RRF_SHARED_TF = True
-
-
 @register("txt_rrf_fusion", _RRF_SQL)
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RRF-fuse the BM25 top-10 (the registered txt_bm25_topk ranking,
@@ -212,40 +206,23 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both inputs are per-query TOP-K lists (queries x 10 rows);
     fusion is one union + one hash aggregate + one per-query window over
     <= 2 x 10 candidates per query. The coverage system's corpus-sized
-    work is ZERO beyond BM25's own postings pass (r18, guide §2.3/§2.4):
-    coverage counts rows of BM25's ``tf`` table — which holds exactly
-    one row per distinct (doc_id, word) — joined to the broadcast query
-    terms, so the pre-r18 second tokenize pass + its distinct shuffle
-    are gone while the counted (query, doc, word) triple set is
-    identical (A/B bit-identical: bench_runs/r18_rrf_shared_tf_ab.json).
+    work is ZERO beyond BM25's own postings pass: coverage counts rows
+    of BM25's ``tf`` table — which holds exactly one row per distinct
+    (doc_id, word) — joined to the broadcast query terms, so no second
+    tokenize pass or distinct shuffle runs
+    (bench_runs/r18_rrf_shared_tf_ab.json).
     """
     q = spark.createDataFrame(_BM25_QUERIES, ["query", "word"])
-    if _RRF_SHARED_TF:
-        ranked, tf = bm25_chain(spark, sf_dir)
-        bm25 = ranked.select("query", "doc_id", "rank")
-        # tf is one row per distinct (doc_id, word): joining the distinct
-        # (query, word) list gives exactly the distinct (query, doc, word)
-        # triples the old explode+distinct produced — count unchanged
-        cov = (
-            tf.join(F.broadcast(q), "word")
-            .groupBy("query", "doc_id")
-            .agg(F.count("*").alias("cov"))
-        )
-    else:
-        # pre-r18 form, kept verbatim for the A/B harness
-        bm25 = QUERIES["txt_bm25_topk"](spark, sf_dir).select(
-            "query", "doc_id", "rank"
-        )
-        docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-        from mapreduce_system_spark.functions.text import tokens
-
-        post = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
-        cov = (
-            post.join(F.broadcast(q), "word")
-            .distinct()
-            .groupBy("query", "doc_id")
-            .agg(F.count("*").alias("cov"))
-        )
+    ranked, tf = bm25_chain(spark, sf_dir)
+    bm25 = ranked.select("query", "doc_id", "rank")
+    # tf is one row per distinct (doc_id, word): joining the distinct
+    # (query, word) list gives exactly the distinct (query, doc, word)
+    # triples, one count per covered term
+    cov = (
+        tf.join(F.broadcast(q), "word")
+        .groupBy("query", "doc_id")
+        .agg(F.count("*").alias("cov"))
+    )
     win = W.partitionBy("query").orderBy(F.desc("cov"), "doc_id")
     covr = (
         cov.select("query", "doc_id", F.row_number().over(win).alias("rank"))

@@ -55,48 +55,22 @@ def _pinned_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, old)
 
 
-# r18 A/B flag (tools/ab_stream_shuffle.py patches this to a fixed int;
-# None = the scale-adaptive default below, the measured winner recorded
-# in bench_runs/r18_stream_shuffle_ab.json)
-_STREAM_SHUFFLE_PIN: int | None = None
+# The stream's shuffle-partition count: the state store creates one
+# instance per shuffle partition per batch. On 4 cores, 32 partitions ran
+# the three streaming-state queries 2.3x slower than 8 (10 alternating
+# pairs, bench_runs/r19_stream_shuffle_ab.json).
+_STREAM_SHUFFLE_PARTITIONS = 8
 
 
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int | None = None):
+def _stream_shuffle(spark: SparkSession):
     """Pin the stream's shuffle-partition count around its START: the
-    state store creates one instance per shuffle partition per batch,
-    and the count binds to the query's fresh checkpoint at start (the
-    session value is restored immediately after — it is the STREAM's
-    knob, not the session's).
+    count binds to the query's fresh checkpoint at start, and the session
+    value is restored immediately after (it is the STREAM's knob, not the
+    session's)."""
+    return _pinned_conf(
+        spark, "spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE_PARTITIONS)
+    )
 
-    Default (r18): ``max(8, defaultParallelism)`` — scale-adaptive, not
-    a constant. The r12-era constant 8 was sized when per-instance
-    state-store overhead dominated; the r18 profile shows the dominant
-    term is now the per-group Python handler time
-    (``allUpdatesTimeMs`` ~1.4 s/batch across 8 partitions at sf0.1),
-    which the pin was CAPPING at 8 concurrent workers on a 32-core
-    master. Deriving from ``defaultParallelism`` keeps the 8-core
-    driver run at the old shape (8) while wider masters get their
-    cores; at production volume the same rule sizes the store shards to
-    the cluster, with ``$SPARK_GRAFT_STREAM_SHUFFLE`` as the explicit
-    override."""
-    if n is None:
-        n = _STREAM_SHUFFLE_PIN
-    if n is None:
-        import os
-
-        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        n = (
-            int(env)
-            if env
-            else max(8, spark.sparkContext.defaultParallelism)
-        )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 # Same oracle as stream_user_totals_batch (queries/streaming.py): the
 # stream's final state must equal the batch aggregate.
@@ -409,11 +383,6 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r18 A/B flag (tools/ab_tws_changelog.py patches this; default is the
-# measured winner recorded in bench_runs/r18_tws_changelog_ab.json)
-_TWS_CHANGELOG_CKPT = True
-
-
 @register("stream_stateful_sessions_tws", _STATEFUL_SESSIONS_SQL)
 def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same sessionization on ``transformWithStateInPandas`` — the
@@ -436,13 +405,10 @@ def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming."
         "state.RocksDBStateStoreProvider"
     )
-    # changelog checkpointing (r18, guide §5 state/spill): per commit,
-    # upload the batch's CHANGELOG instead of snapshotting RocksDB
-    # SST files — snapshots move to a background maintenance thread, so
-    # the per-micro-batch commit path stops paying the full-store
-    # upload. A/B'd on this query's replay (2-3 micro-batches):
-    # bench_runs/r18_tws_changelog_ab.json; the module flag exists for
-    # that harness.
+    # changelog checkpointing: per commit, upload the batch's CHANGELOG
+    # instead of snapshotting RocksDB SST files — snapshots move to a
+    # background maintenance thread, off the per-micro-batch commit path
+    # (bench_runs/r18_tws_changelog_ab.json).
     changelog = (
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled"
@@ -450,7 +416,7 @@ def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _pinned_conf(
         spark, "spark.sql.streaming.stateStore.providerClass", rocksdb
     ), _pinned_conf(
-        spark, changelog, "true" if _TWS_CHANGELOG_CKPT else "false"
+        spark, changelog, "true"
     ), tws_protobuf_env(spark):
         return _run_session_stream(
             spark,

@@ -187,12 +187,6 @@ def user_sessions_stateful(events: DataFrame, gap_s: int = 1800) -> DataFrame:
 # transformWithStateInPandas twin (Spark 4.x StatefulProcessor API)
 # ---------------------------------------------------------------------------
 
-# r18 A/B flag (tools/ab_tws_timer.py patches this; default is the
-# measured winner recorded in bench_runs/r18_tws_timer_ab.json): compute
-# the previous close timer's instant from the open-session state instead
-# of paging it from the state server per group per batch.
-_TWS_COMPUTED_TIMER = True
-
 
 def _tws_session_processor(gap_s: int):
     """Build the StatefulProcessor class lazily: importing
@@ -203,11 +197,6 @@ def _tws_session_processor(gap_s: int):
         StatefulProcessor,
         StatefulProcessorHandle,
     )
-
-    # captured as a CLOSURE value at factory time (driver): the class is
-    # pickled to executors, whose module copy would otherwise shadow an
-    # A/B patch of the module flag
-    computed_timer = _TWS_COMPUTED_TIMER
 
     class SessionProcessor(StatefulProcessor):
         """Sessionization on the modern typed-state API — the semantics
@@ -268,36 +257,13 @@ def _tws_session_processor(gap_s: int):
             # one live timer per key: drop the previous close timer
             # before arming the new one (same +500ms placement as the
             # GST twin: past every merge-eligible instant, before the
-            # next whole second).
-            new_timer = (l + self._gap_s) * 1000 + 500
-            if computed_timer:
-                # the live timer's instant is a pure function of the
-                # state this handler just read: state non-None <=> one
-                # timer armed at (last_es + gap)s + 500ms (registered
-                # below the update that wrote last_es; consumed exactly
-                # when handleExpiredTimer clears the state). Computing
-                # it skips the per-group listTimers round trip to the
-                # state server — the paged iterator was ~1 of the ~5
-                # RTTs behind the measured ~7.7 ms/group-call floor
-                # (r18 profile, OPTIMIZATION_r18.md) — and when the
-                # batch did not extend the session the timer needs no
-                # re-arm at all (2 more RTTs skipped).
-                old_timer = (
-                    None
-                    if existing is None
-                    else (int(existing[1]) + self._gap_s) * 1000 + 500
-                )
-                if old_timer != new_timer:
-                    if old_timer is not None:
-                        self._handle.deleteTimer(old_timer)
-                    self._handle.registerTimer(new_timer)
-            else:
-                # pre-r18 form (A/B arm): list-then-delete every timer.
-                # listTimers pages from the state server — materialize
-                # before mutating what it iterates.
-                for t in list(self._handle.listTimers()):
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(new_timer)
+            # next whole second). listTimers pages from the state
+            # server — materialize before mutating what it iterates.
+            # Computing the old instant from the state instead saved no
+            # measurable time (bench_runs/r19_tws_timer_ab.json).
+            for t in list(self._handle.listTimers()):
+                self._handle.deleteTimer(t)
+            self._handle.registerTimer((l + self._gap_s) * 1000 + 500)
             if closed:
                 yield pd.DataFrame(
                     {

@@ -58,3 +58,41 @@ def test_spread_rule_rejects_wide_and_monotone_decay():
     with pytest.raises(SpreadError):
         assert_sane_walls({"a": [16.4, 14.2, 14.8], "b": [21.07, 8.24, 7.33]})
     assert_sane_walls({"a": [16.4, 14.2, 14.8], "b": [22.3, 18.6, 23.1]})
+
+
+def test_ab_decision_rule_and_output_check(tmp_path):
+    """tools/ab.py: B counts as faster only when it wins >= 9 of 10
+    pairs AND the medians differ by more than A's interquartile range;
+    differing outputs raise before any record is written."""
+    import pytest
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from tools.ab import OutputMismatch, ab, verdict
+
+    a = [10.0, 10.4, 9.8, 10.2, 10.1, 9.9, 10.3, 10.0, 10.2, 9.9]  # IQR 0.3
+    # 9 of 10 wins, median gap ~1.0 > IQR: a gain
+    b = [x - 1.0 for x in a[:9]] + [a[9] + 0.5]
+    assert verdict(a, b)["wins_b"] == 9
+    assert verdict(a, b)["verdict"] == "B faster"
+    # 8 of 10 wins, same gap: no gain
+    b8 = [x - 1.0 for x in a[:8]] + [a[8] + 0.5, a[9] + 0.5]
+    assert verdict(a, b8)["wins_b"] == 8
+    assert verdict(a, b8)["verdict"] == "no difference shown"
+    # 9 of 10 wins but the median gap (0.05) sits inside A's IQR: no gain
+    b_close = [x - 0.05 for x in a[:9]] + [a[9] + 0.5]
+    v = verdict(a, b_close)
+    assert v["wins_b"] == 9 and v["iqr_a_s"] > 0.05
+    assert v["verdict"] == "no difference shown"
+    # the mirror rule reads a regression
+    assert verdict(b, a)["verdict"] == "B slower"
+
+    # differing outputs: raise, write nothing
+    walls = iter(a * 3)
+
+    def run(value):
+        return next(walls), ["row"] if value == "A" else ["other row"]
+
+    out = tmp_path / "rec.json"
+    with pytest.raises(OutputMismatch):
+        ab(run, "A", "B", out, {})
+    assert not out.exists()

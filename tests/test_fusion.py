@@ -30,26 +30,31 @@ def _rankings(spark):
     ]
 
 
-def test_rrf_matches_pure_python_reference(spark):
-    got = {
-        (r.query, r.item): (round(r.rrf_score, 10), r.fused_rank)
-        for r in rrf_fuse(_rankings(spark), k0=60).collect()
-    }
+def _ref_rrf(lists, k0):
+    """Independent reference: (query, item) -> (rrf_score, fused_rank),
+    score = sum of 1/(k0 + rank), ranked by (score DESC, item ASC)."""
     scores: dict = {}
-    for lst in (_SYS_A, _SYS_B):
+    for lst in lists:
         for q, d, rk in lst:
-            scores[(q, d)] = scores.get((q, d), 0.0) + 1.0 / (60 + rk)
-    want_rank: dict = {}
+            scores[(q, d)] = scores.get((q, d), 0.0) + 1.0 / (k0 + rk)
+    want: dict = {}
     for q in {k[0] for k in scores}:
         items = sorted(
             (k[1] for k in scores if k[0] == q),
             key=lambda d: (-scores[(q, d)], d),
         )
         for i, d in enumerate(items, 1):
-            want_rank[(q, d)] = i
-    assert set(got) == set(scores)
-    for k in scores:
-        assert got[k] == (round(scores[k], 10), want_rank[k])
+            want[(q, d)] = (scores[(q, d)], i)
+    return want
+
+
+def test_rrf_matches_pure_python_reference(spark):
+    got = {
+        (r.query, r.item): (round(r.rrf_score, 10), r.fused_rank)
+        for r in rrf_fuse(_rankings(spark), k0=60).collect()
+    }
+    want = _ref_rrf([_SYS_A, _SYS_B], 60)
+    assert got == {k: (round(s, 10), rk) for k, (s, rk) in want.items()}
     # doc 11 leads q1: ranks 2+1 beat doc 10's 1+3 under 1/(60+r)
     assert got[("q1", 11)][1] == 1 and got[("q1", 10)][1] == 2
 
@@ -182,19 +187,44 @@ def test_matryoshka_raises_on_prefix_beyond_dimension(spark):
 
 
 def test_rrf_fusion_shared_tf_matches_two_pass(spark):
-    """txt_rrf_fusion's shared-tf coverage (r18 default: counts rows of
-    BM25's tf postings table) ≡ the pre-r18 explode+distinct coverage —
-    the fused ranking must be bit-identical, or the tf reuse changed
+    """txt_rrf_fusion counts coverage over BM25's tf postings table (one
+    row per distinct (doc_id, word)). Its fused ranking must equal the
+    pure-Python RRF fed the registered BM25 ranking and a coverage list
+    built from a SECOND, independent tokenize pass (distinct query terms
+    per doc, top-k by coverage then doc_id) — or the tf reuse changed
     what coverage counts."""
+    import re
+
     from mapreduce_system_spark.queries import fresh11
+    from mapreduce_system_spark.queries._bm25shared import BM25_QUERIES, BM25_TOPK
+    from mapreduce_system_spark.registry import QUERIES
+    from mapreduce_system_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
-    orig = fresh11._RRF_SHARED_TF
-    try:
-        fresh11._RRF_SHARED_TF = True
-        shared = [tuple(r) for r in fresh11.q_rrf_fusion(spark, SF_DIR).collect()]
-        fresh11._RRF_SHARED_TF = False
-        two_pass = [tuple(r) for r in fresh11.q_rrf_fusion(spark, SF_DIR).collect()]
-    finally:
-        fresh11._RRF_SHARED_TF = orig
-    assert shared == two_pass
+    bm25 = [
+        (r.query, r.doc_id, r.rank)
+        for r in QUERIES["txt_bm25_topk"](spark, SF_DIR).collect()
+    ]
+    terms: dict[str, set[str]] = {}
+    for q, w in BM25_QUERIES:
+        terms.setdefault(q, set()).add(w)
+    docs = [
+        (r.doc_id, set(re.split(r"\W+", r.text.lower(), flags=re.ASCII)))
+        for r in load_table(spark, SF_DIR, "documents", columns=["doc_id", "text"])
+        .where("text IS NOT NULL")
+        .collect()
+    ]
+    cov = []
+    for q, ws in terms.items():
+        counts = {d: len(ws & words) for d, words in docs if ws & words}
+        top = sorted(counts, key=lambda d: (-counts[d], d))[:BM25_TOPK]
+        cov += [(q, d, i) for i, d in enumerate(top, 1)]
+    want = _ref_rrf([bm25, cov], fresh11._RRF_K0)
+    got = {
+        (r.query, r.doc_id): (r.rrf_score, r.fused_rank)
+        for r in fresh11.q_rrf_fusion(spark, SF_DIR).collect()
+    }
+    assert set(got) == set(want)
+    for k, (score, rank) in want.items():
+        assert got[k][1] == rank, k
+        assert abs(got[k][0] - score) < 1e-6, k

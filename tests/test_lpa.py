@@ -203,40 +203,27 @@ def test_lpa_matches_reference_on_40_random_topologies(spark):
 
 
 def test_lpa_mode_argmax_is_bit_identical(spark):
-    """r17 optimization: the per-round argmax as a single
-    mode(lbl, deterministic=True) aggregate (Spark 4: lowest value among
-    equally-frequent ones — exactly the most-frequent-then-smallest LPA
-    tie-break) must produce the exact same labels as the two-phase
-    count + max(struct(cnt, -label)) form it replaces (whose struct-max
-    buffer forces a SortAggregate pair — two per-round sorts; A/B
-    bench_runs/r17_lpa_mode_ab.json measured mode at 0.66x on the
-    registered query's graph). Tie-heavy fixture: random
-    topologies where many nodes see equal neighbor-label counts, so the
-    tie-break arm is genuinely exercised."""
+    """The per-round argmax is a single mode(lbl, deterministic=True)
+    aggregate (Spark 4: lowest value among equally-frequent ones —
+    exactly the most-frequent-then-smallest LPA tie-break); its labels
+    must equal the pure-Python reference's exactly. Tie-heavy fixture:
+    random topologies where many nodes see equal neighbor-label counts,
+    so the tie-break is genuinely exercised — run as DISJOINT id-offset
+    components of one graph (LPA on a disjoint union is LPA per
+    component)."""
     import random
 
     rng = random.Random(7117)
-    for _ in range(10):
+    all_edges: list[tuple[int, int]] = []
+    for g in range(10):
         n = rng.randint(4, 24)
-        edges = [
-            (a, b)
+        base = (g + 1) * 1000
+        all_edges += [
+            (base + a, base + b)
             for a in range(n)
             for b in range(a + 1, n)
             if rng.random() < 0.3
         ]
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "src long, dst long")
-        two_phase = {
-            (r.node, r.label)
-            for r in label_propagation(
-                df, iterations=3, argmax_mode=False
-            ).collect()
-        }
-        via_mode = {
-            (r.node, r.label)
-            for r in label_propagation(
-                df, iterations=3, argmax_mode=True
-            ).collect()
-        }
-        assert two_phase == via_mode, f"n={n} edges={edges}"
+    df = spark.createDataFrame(all_edges, "src long, dst long")
+    got = {r.node: r.label for r in label_propagation(df, iterations=3).collect()}
+    assert got == _ref_lpa(all_edges, 3)

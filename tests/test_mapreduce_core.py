@@ -89,10 +89,9 @@ def test_map_reduce_scalable_matches_rdd_variant(spark):
     assert scalable == rdd_based == {"hello": "2", "is": "2", "my": "1", "name": "3"}
 
 
-def test_map_reduce_scalable_arrow_and_pandas_reduce_agree(spark):
-    """The applyInArrow reduce (r18 default) ≡ the applyInPandas form —
-    same keys, same sorted value lists handed to reducef, same output.
-    The reducef here ECHOES its value list so ordering drift (not just
+def test_map_reduce_scalable_sorted_value_echo_matches_rdd_variant(spark):
+    """Both engines hand reducef the SAME sorted value list per key. The
+    reducef here ECHOES its value list, so ordering drift (not just
     count drift) would fail."""
     df = spark.createDataFrame(
         [("f1", "b a c a"), ("f2", "a c b b")], ["file", "content"]
@@ -104,16 +103,16 @@ def test_map_reduce_scalable_arrow_and_pandas_reduce_agree(spark):
     def reducef(key, values):
         return "|".join(values)  # sorted order is part of the contract
 
-    arrow = {
+    scalable = {
         r.key: r.value
-        for r in MR.map_reduce_scalable(df, mapf, reducef, arrow_groups=True).collect()
+        for r in MR.map_reduce_scalable(df, mapf, reducef).collect()
     }
-    pandas_ = {
+    rdd_based = {
         r.key: r.value
-        for r in MR.map_reduce_scalable(df, mapf, reducef, arrow_groups=False).collect()
+        for r in MR.map_reduce(spark, df, mapf, reducef, n_reduce=4).collect()
     }
-    assert arrow == pandas_
-    assert arrow["a"] == "f1:1|f1:3|f2:0"
+    assert scalable == rdd_based
+    assert scalable["a"] == "f1:1|f1:3|f2:0"
 
 
 def test_generic_contract_mapf_tolerates_null_text():

@@ -40,29 +40,24 @@ def test_every_oracle_has_a_query():
 
 def test_r17_driver_window_composition():
     """IMPORT ORDER IS LOAD-BEARING (queries/__init__.py): the driver's
-    correctness gate covers the FIRST 50 registered queries. Pin the r17
-    window EXACTLY (module granularity per the rotation plan in the
-    package docstring) so an accidental import reorder — or a module
-    gaining a query — can't silently rotate evidence-stale or brand-new
-    queries out of the gate. Update deliberately with each rotation."""
+    correctness gate covers the FIRST 50 registered queries. Pin the
+    window the package registers (the r18 rotation, module granularity
+    per the plan in the package docstring) EXACTLY so an accidental
+    import reorder — or a module gaining a query — can't silently rotate
+    evidence-stale or brand-new queries out of the gate. Update
+    deliberately with each rotation."""
     expected_modules = [
-        ("fresh14", 2),      # zero-evidence r16 debuts (VERDICT r16 #1)
-        ("fresh15", 2),      # zero-evidence r16 debuts
-        ("fresh16", 1),      # zero-evidence r16 debut
-        ("textstats", 7),    # the r13-stale cohort from here
-        ("fresh7b2", 2),
-        ("fresh7", 1),
-        ("fresh7c", 2),
-        ("fresh7e", 1),
-        ("fresh7f", 3),
-        ("multimodal", 5),
-        ("fresh9", 5),
-        ("fresh10", 3),      # the oldest r14 rows from here
-        ("temporal", 5),
-        ("advanced", 7),
-        ("relational2", 4),  # r13-stale trio first (internal reorder,
-                             # see relational2.py docstring) + one
-                             # r16-fresh re-row at slot 50; tail opens r18
+        ("fresh14", 2),      # r17-touched k_truss leads
+        ("fresh10", 3),      # r17-touched label_propagation
+        ("fresh8f", 5),      # r17-touched triangle_count
+        ("fresh8g", 4),      # r17-touched table_profile
+        ("fresh8j", 3),      # r17-touched degree_distribution
+        ("fresh17", 2),      # the r17 debuts' second rows
+        ("similarity", 9),   # the r14-row cohort from here
+        ("multimodal2", 1),
+        ("sinks", 5),
+        ("dedup", 8),
+        ("relational", 8),   # its first 8; the tail 4 open r19
     ]
     assert sum(c for _, c in expected_modules) == 50
     names = list(QUERIES)
@@ -74,29 +69,19 @@ def test_r17_driver_window_composition():
             got_modules.append([mod, 0])
         got_modules[-1][1] += 1
     assert [tuple(m) for m in got_modules] == expected_modules, got_modules
-    # the five zero-driver-row r16 registrations lead (VERDICT r16 #1)
-    assert window[:5] == [
-        "graph_k_truss",
-        "txt_pmi_collocations",
-        "graph_components_jump",
-        "stream_interval_join_full",
-        "agg_cms_heavy_hitters",
-    ]
-    # relational2's r13-stale trio sits INSIDE the boundary (the module
-    # registers them first since the r17 internal reorder)
-    assert window[46:50] == [
-        "rel_full_outer_join",
-        "rel_pivot_priority_revenue",
-        "rel_unpivot_metrics",
-        "agg_distinct_stats",
-    ]
-    # relational2's remaining r16-fresh rows sit immediately past the
-    # line, then this round's registrations (fresh17 — the
-    # fresh12/13/14 wire-in-N+1 precedent): first driver rows come with
-    # the r18 window lead, not by displacing r17 rotation debt
+    # the r17-touched queries sit at the slots the rotation plan names
+    assert window[0] == "graph_k_truss"
+    assert window[2] == "graph_label_propagation"
+    assert window[5] == "graph_triangle_count"
+    assert window[10] == "rel_table_profile"
+    assert window[16] == "graph_degree_distribution"
+    # relational's first 8 fill the window; its tail 4 sit immediately
+    # past the line, in the order the r19 rotation opens with
+    assert window[42] == "rel_broadcast_join_region_revenue"
+    assert window[49] == "rel_window_lag_rank"
     assert names[50:54] == [
-        "agg_approx_distinct",
-        "agg_star_pricing",
-        "dedup_sorted_neighborhood",
-        "txt_kneser_ney_surprisal",
+        "rel_set_ops",
+        "rel_cube",
+        "rel_rollup",
+        "rel_grouping_sets",
     ]

@@ -230,3 +230,40 @@ def test_ktruss_orientation_reuse_is_bit_identical(spark):
     assert got == _ref_ktruss(edges, 4, 2)
     # peeling genuinely removed edges (the reuse path saw a shrunken set)
     assert len(got) < len(edges)
+
+
+def test_ktruss_explode_members_is_bit_identical(spark):
+    """r17 optimization: the member-edge census is ONE explode(array(...))
+    pass over the triangle stream, three value-ordered member structs per
+    triangle. At k=2 nothing peels (support >= 0 always), so the output
+    is the census itself: every input edge with exactly the number of
+    triangles it closes. Checked against a brute-force a<b<c triangle
+    listing exploded into its three members by hand — independent of
+    both the operator's degree-ordered enumeration and the adjacency
+    reference — on the seed-9100 dense-ish graph."""
+    import itertools
+    import random
+    from collections import Counter
+
+    rng = random.Random(9100)
+    n = 30
+    edges = [
+        (a, b)
+        for a in range(n)
+        for b in range(a + 1, n)
+        if rng.random() < 0.25
+    ]
+    es = set(edges)
+    census = Counter()
+    for a, b, c in itertools.combinations(range(n), 3):
+        if (a, b) in es and (a, c) in es and (b, c) in es:
+            census.update([(a, b), (a, c), (b, c)])
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        (r.u, r.v): r.support
+        for r in k_truss_edges(df, 2, rounds=1).collect()
+    }
+    assert got == {e: census[e] for e in es}
+    assert got == _ref_ktruss(edges, 2, 1)
+    # the fixture has triangles and triangle-free edges alike
+    assert sum(got.values()) > 0 and min(got.values()) == 0
